@@ -774,7 +774,16 @@ def main() -> None:
     scaling_probe = None
     probe_dir = os.environ.get("SPARK_GRAFT_SCALING_SF")
     if probe_dir and os.path.isdir(probe_dir):
-        probe_n = int(os.environ.get("SPARK_GRAFT_SCALING_TOP", "10"))
+        top_env = os.environ.get("SPARK_GRAFT_SCALING_TOP", "10")
+        try:
+            probe_n = int(top_env)
+        except ValueError:
+            probe_n = 10
+            print(
+                f"[bench] SPARK_GRAFT_SCALING_TOP={top_env!r} is not an"
+                " integer; probing the top 10",
+                file=sys.stderr,
+            )
         top = [
             n for n, _ in sorted(per_query.items(), key=lambda kv: -kv[1])
         ][:probe_n]

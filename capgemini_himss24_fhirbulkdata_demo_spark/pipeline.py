@@ -5,17 +5,21 @@ The reference's ``POST /himss24demo/bulkimport/latest`` flow
 
 1. driver-side connector: auth → $export kickoff (with the persisted
    ``_since`` cursor) → poll → land NDJSON files;
-2. **per-resource-type Spark jobs**: read landed NDJSON (curated
-   schema) → (source, resource) transform → write NDJSON to the
-   export area. Files are independent loads (the reference loops
-   sequentially, ``:644``; here each file is its own narrow job —
-   SURVEY §4.3.4);
+2. **one Spark job per resource type**: read that type's landed
+   NDJSON files as one scan (curated schema, rows tagged by source
+   file) → (source, resource) transform → write one NDJSON file per
+   landed file to the export area. Files stay independent loads (the
+   reference loops over them sequentially, ``:644``): every
+   file-scoped rule keys on the file tag, so batching changes the job
+   count, not the per-file outputs. The type jobs run concurrently
+   (SURVEY §4.3.4);
 3. driver-side sink-commit: build the FHIR ``Parameters`` manifest →
    $import → poll → archive landed files → advance the cursor.
 
-The transform stage is shuffle-free except the two broadcast joins
-(RxNav enrichment map, removed-ids anti-join), so step 2 pipelines in
-one stage per file regardless of file size.
+The transform stage is shuffle-free except the EOB removed-ids
+groupBy; its two joins (RxNav enrichment map, removed-ids anti-join)
+broadcast. Step 2 therefore costs a fixed handful of stages per
+resource type, however many files landed.
 """
 
 from __future__ import annotations
@@ -25,17 +29,25 @@ import logging
 import os
 import re
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 logger = logging.getLogger(__name__)
 
 from .connectors.fhir_bulk import FhirBulkConnector, build_import_manifest
 from .connectors.state import HighWaterMark
-from .sources.ndjson import read_ndjson, resource_type_from_name, write_ndjson
+from .sources.ndjson import (
+    INPUT_FILE_COL,
+    read_ndjson,
+    resource_type_from_name,
+    write_ndjson_per_file,
+)
 from .transforms import get_transform
 from .transforms.schemas import RESOURCE_SCHEMAS
 
@@ -43,10 +55,68 @@ from .transforms.schemas import RESOURCE_SCHEMAS
 @dataclass
 class PipelineResult:
     landed: list[str] = field(default_factory=list)
-    transformed: dict[str, str] = field(default_factory=dict)  # path -> out dir
+    transformed: dict[str, str] = field(default_factory=dict)  # path -> out file
+    # landed path -> (rows read, rows written), from the T16 audit
+    counts: dict[str, tuple[int, int]] = field(default_factory=dict)
     import_status_url: str | None = None
     archived: list[str] = field(default_factory=list)
     since_advanced_to: str | None = None
+
+
+class LandedOutput(NamedTuple):
+    out: str  # the single $import-ready NDJSON file
+    rows_in: int
+    rows_out: int
+
+
+def transform_landed_files(
+    spark: SparkSession,
+    paths: list[str],
+    server_url: str,
+    out_dir: str,
+    rxnav: DataFrame | None = None,
+) -> dict[str, LandedOutput]:
+    """Step 2 for landed files of ONE resource type, as one Spark job:
+    read them as one multi-file scan tagged by source file → build the
+    transform once → write one NDJSON file per landed file.
+
+    Unknown (source, resource) pairs pass through untouched (the
+    reference ignores them too). File-scoped semantics survive the
+    batching: the EOB removed-ids exclusion keys on the file tag, and
+    each output holds exactly its own file's rows.
+
+    T16 count audit (``__init__.py:532`` "{kept}/{total} will be
+    loaded") rides the write as ``observe`` metrics, one ``count_if``
+    per file on each side of the transform — single pass, no extra
+    jobs, unlike the reference's len() bookkeeping.
+    """
+    names = [os.path.basename(p) for p in paths]
+    resources = {resource_type_from_name(p) for p in paths}
+    if len(resources) != 1 or len(set(names)) != len(names):
+        raise ValueError(f"need distinct file names of one resource type: {names}")
+    resource = resources.pop()
+
+    def per_file_counts():
+        tag = F.col(INPUT_FILE_COL)
+        return [F.count_if(tag == n).alias(str(i)) for i, n in enumerate(names)]
+
+    obs_in, obs_out = Observation(), Observation()
+    df = read_ndjson(spark, paths, RESOURCE_SCHEMAS.get(resource), with_input_file=True)
+    df = df.observe(obs_in, *per_file_counts())
+    fn = get_transform(server_url, resource)
+    if fn is not None:
+        df = fn(df, rxnav)
+    df = df.observe(obs_out, *per_file_counts())
+    # one NDJSON FILE per export file: $import urls must point at a
+    # single application/fhir+ndjson blob, not a part-file directory
+    outs = [os.path.join(out_dir, os.path.splitext(n)[0] + ".ndjson") for n in names]
+    write_ndjson_per_file(df, dict(zip(names, outs)))
+    res = {}
+    for i, (path, name, out) in enumerate(zip(paths, names, outs)):
+        n_in, n_out = obs_in.get[str(i)], obs_out.get[str(i)]
+        logger.info("%s: %s/%s resources will be loaded", name, n_out, n_in)
+        res[path] = LandedOutput(out, n_in, n_out)
+    return res
 
 
 def transform_landed_file(
@@ -56,37 +126,8 @@ def transform_landed_file(
     out_dir: str,
     rxnav: DataFrame | None = None,
 ) -> str:
-    """Step 2 for one landed file: read → transform → write NDJSON.
-
-    Returns the output directory. Unknown (source, resource) pairs
-    pass through untouched (the reference ignores them too).
-
-    T16 count audit (``__init__.py:532`` "{kept}/{total} will be
-    loaded") rides the write as ``observe`` metrics — single pass, no
-    extra jobs, unlike the reference's len() bookkeeping.
-    """
-    resource = resource_type_from_name(path)
-    schema = RESOURCE_SCHEMAS.get(resource)
-    obs_in = Observation(f"in:{os.path.basename(path)}")
-    df = read_ndjson(spark, path, schema).observe(obs_in, F.count(F.lit(1)).alias("n"))
-    fn = get_transform(server_url, resource)
-    if fn is not None:
-        df = fn(df, rxnav)
-    obs_out = Observation(f"out:{os.path.basename(path)}")
-    df = df.observe(obs_out, F.count(F.lit(1)).alias("n"))
-    # one NDJSON FILE per export file: $import urls must point at a
-    # single application/fhir+ndjson blob, not a part-file directory
-    out = os.path.join(
-        out_dir, os.path.splitext(os.path.basename(path))[0] + ".ndjson"
-    )
-    write_ndjson(df, out, single_file=True)
-    logger.info(
-        "%s: %s/%s resources will be loaded",
-        os.path.basename(path),
-        obs_out.get["n"],
-        obs_in.get["n"],
-    )
-    return out
+    """Step 2 for one landed file; returns its output file."""
+    return transform_landed_files(spark, [path], server_url, out_dir, rxnav)[path].out
 
 
 def run_bulk_import(
@@ -102,18 +143,20 @@ def run_bulk_import(
     state: HighWaterMark | None = None,
     client_id: str = "client",
     blob_base_url: str = "file://",
-    max_parallel_files: int = 8,
 ) -> PipelineResult:
     """The full export → transform → import → archive flow.
 
-    Landed files transform as CONCURRENT Spark jobs (driver-side
-    thread pool — the standard multi-job submission pattern): each
-    file's job is narrow and its single-blob NDJSON write is one task
-    (``write_ndjson(single_file=True)``), so a sequential loop would
-    execute the whole stage nearly single-threaded. The reference
-    loops sequentially (``__init__.py:644``); SURVEY §4.3.4 calls for
-    independent parallel loads. ``max_parallel_files`` bounds
-    concurrent jobs (scheduler pressure), not correctness.
+    Landed files are grouped by resource type, and each group is ONE
+    Spark job (``transform_landed_files``) that still writes one
+    output file per landed file. The per-file fixed costs — building
+    the transform's expression tree, aggregating and broadcasting the
+    RxNav map, a write job — are paid once per type instead of once
+    per file, and a type's files share one scan whose tasks spread
+    over the cores. The type groups run as CONCURRENT jobs on a
+    driver-side thread pool, one thread per type, under the caller's
+    job group. The reference loops
+    over files sequentially (``__init__.py:644``); SURVEY §4.3.4 calls
+    for independent parallel loads.
     """
     res = PipelineResult()
     since = state.get(server_url, group_id) if state else None
@@ -130,18 +173,24 @@ def run_bulk_import(
     res.landed = connector.land_export(manifest, token, landing, client_id=client_id)
 
     out_dir = os.path.join(work_dir, "export")
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=max(1, max_parallel_files)) as pool:
-        futures = {
-            path: pool.submit(
-                transform_landed_file, spark, path, server_url, out_dir, rxnav
-            )
-            for path in res.landed
-        }
-        # dict insertion order == landed order: deterministic result map
-        for path, fut in futures.items():
-            res.transformed[path] = fut.result()
+    by_type: dict[str, list[str]] = {}
+    for path in res.landed:
+        by_type.setdefault(resource_type_from_name(path), []).append(path)
+    done: dict[str, LandedOutput] = {}
+    # pool threads inherit the caller's job group, local properties and
+    # tags, so the type jobs are attributed (and cancellable) like its own
+    transform = inheritable_thread_target(spark)(transform_landed_files)
+    with ThreadPoolExecutor(max_workers=max(1, len(by_type))) as pool:
+        futures = [
+            pool.submit(transform, spark, paths, server_url, out_dir, rxnav)
+            for paths in by_type.values()
+        ]
+        for fut in futures:
+            done.update(fut.result())
+    # landed order: deterministic result maps
+    for path in res.landed:
+        res.transformed[path] = done[path].out
+        res.counts[path] = (done[path].rows_in, done[path].rows_out)
 
     entries = [
         (p, f"{blob_base_url}{res.transformed[p]}") for p in res.landed

@@ -26,9 +26,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
+INPUT_FILE_COL = "_input_file"
+
+
 def read_ndjson(
     spark: SparkSession,
-    path: str,
+    path: str | list[str],
     schema: StructType | None = None,
     with_input_file: bool = False,
 ) -> DataFrame:
@@ -37,13 +40,22 @@ def read_ndjson(
     With a curated ``schema``, missing fields are null (the
     reference's tolerant ``try/except KeyError`` behavior); without,
     Spark infers by sampling (dev only — SURVEY §1.2).
+
+    ``with_input_file=True`` tags every row with the name of the file
+    it came from, as ``INPUT_FILE_COL``. The tag is the file source's
+    hidden ``_metadata.file_name`` column, decoded: the source reports
+    the URI-escaped name (``a b`` as ``a%20b``), and a literal ``+``
+    is protected first so the form decoder cannot read it as a space.
+    The decoded tag equals ``os.path.basename`` of the file path.
+    Names are only unique within one directory.
     """
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
     df = reader.json(path)
     if with_input_file:
-        df = df.withColumn("_input_file", F.input_file_name())
+        escaped = F.replace(F.col("_metadata.file_name"), F.lit("+"), F.lit("%2B"))
+        df = df.withColumn(INPUT_FILE_COL, F.url_decode(escaped))
     return df
 
 
@@ -59,8 +71,8 @@ def write_ndjson(
     ``single_file=True`` produces exactly one NDJSON *file* at
     ``path`` (coalesce(1) + part-file promotion) — the shape a FHIR
     ``$import`` url must point at (one blob per manifest entry,
-    ``__init__.py:351-355``). Parallelism then comes from processing
-    many export files concurrently, not from splitting one.
+    ``__init__.py:351-355``). The write is one task; to write many
+    such files in parallel, use ``write_ndjson_per_file``.
     Returns the written path.
     """
     # Native JSON writer, not to_json(struct(*))+text: the rows hit the
@@ -91,6 +103,50 @@ def write_ndjson(
         os.replace(os.path.join(tmp, part), path)
     shutil.rmtree(tmp)
     return path
+
+
+def write_ndjson_per_file(df: DataFrame, outputs: dict[str, str]) -> None:
+    """Write a frame tagged by ``read_ndjson(with_input_file=True)`` as
+    one NDJSON file per source file, in a single Spark job.
+
+    ``outputs`` maps each source file name (the tag value) to its
+    destination file. The frame is written once with ``partitionBy``
+    on the tag, which also drops the tag from the written rows. Then
+    each file's part files are promoted (one part) or concatenated in
+    task order (several) into its destination. A file with no rows has
+    no partition directory and gets an empty destination file, so
+    every source file still maps to one blob.
+    """
+    import shutil
+    from urllib.parse import unquote
+
+    if not outputs:
+        return
+    tmp = next(iter(outputs.values())) + ".__tmp__"
+    df.write.mode("overwrite").partitionBy(INPUT_FILE_COL).json(tmp)
+    prefix = INPUT_FILE_COL + "="
+    # partition directory names are Hive-escaped tag values
+    parts = {
+        unquote(d[len(prefix):]): os.path.join(tmp, d)
+        for d in os.listdir(tmp)
+        if d.startswith(prefix)
+    }
+    for name, dst in outputs.items():
+        os.makedirs(os.path.dirname(os.path.abspath(dst)), exist_ok=True)
+        src_dir = parts.get(name)
+        files = (
+            sorted(n for n in os.listdir(src_dir) if n.startswith("part-"))
+            if src_dir
+            else []
+        )
+        if len(files) == 1:
+            os.replace(os.path.join(src_dir, files[0]), dst)
+            continue
+        with open(dst, "wb") as out:
+            for n in files:
+                with open(os.path.join(src_dir, n), "rb") as src:
+                    shutil.copyfileobj(src, out)
+    shutil.rmtree(tmp)
 
 
 def resource_type_from_name(blob_name: str) -> str:

@@ -13,7 +13,8 @@ UDFs anywhere (SURVEY §4.3.3). The two relational escapes:
 - Removed-ids anti-join (T17, ``__init__.py:533``): the reference
   scans a Python *list* per record (O(N·R)); here a broadcast
   ``left_anti`` join on id — which also preserves the duplicate-id
-  quirk (any row sharing an id with a removed row is dropped).
+  quirk (any row sharing an id with a removed row of the same landed
+  file is dropped).
 
 Fidelity notes (quirks preserved):
 - claim_type is the *last* matching type.coding entry
@@ -35,6 +36,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.ndjson import INPUT_FILE_COL
 from . import constants as C
 from .schemas import (
     CONDITION_SCHEMA,
@@ -242,14 +244,21 @@ def bcda_explanation_of_benefit(df: DataFrame, rxnav: DataFrame) -> DataFrame:
     # because it serializes the two scans the one-job plan overlaps).
     # At cluster scale the same math holds: one (id,bool) shuffle
     # replaces two id-only shuffles plus a full extra source scan.
-    flags = df.select("id", keep.alias("_keep"))
+    #
+    # The reference builds its removed-ids list per landed file
+    # (``__init__.py:459-533``), so a frame holding several files,
+    # tagged by ``read_ndjson(with_input_file=True)``, keys the
+    # exclusion on (id, file): an id failing in one file must not
+    # remove its passing twin from another.
+    key = ["id"] + ([INPUT_FILE_COL] if INPUT_FILE_COL in df.columns else [])
+    flags = df.select(*key, keep.alias("_keep"))
     conflicted_ids = (
-        flags.groupBy("id")
+        flags.groupBy(*key)
         .agg(F.min("_keep").alias("_all"), F.max("_keep").alias("_any"))
         .filter(F.col("_any") & ~F.col("_all"))
-        .select("id")
+        .select(*key)
     )
-    survivors = df.filter(keep).join(conflicted_ids, "id", "left_anti")
+    survivors = df.filter(keep).join(conflicted_ids, key, "left_anti")
 
     # Mutations (survivors always pass every gate, so unconditional).
     # T11: positional supportingInfo writes (``__init__.py:489-493``).

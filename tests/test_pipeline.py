@@ -17,6 +17,8 @@ from capgemini_himss24_fhirbulkdata_demo_spark.transforms.schemas import (
     RXNAV_LOOKUP_SCHEMA,
 )
 
+from . import fhir_oracle
+
 PATIENTS = [
     {"resourceType": "Patient", "id": "egqBHVfQlt4Bw3XGXoxVxHg3",
      "identifier": [{"system": "old", "value": "X"}]},
@@ -30,7 +32,11 @@ CONDITIONS = [
 
 
 class FakeServer:
-    def __init__(self):
+    """Bulk export + import endpoints over in-memory NDJSON files:
+    ``files`` lists (resource type, records) in manifest order."""
+
+    def __init__(self, files=None):
+        self.files = files or [("Patient", PATIENTS), ("Condition", CONDITIONS)]
         self.kickoff_urls: list[str] = []
         self.import_bodies: list[dict] = []
 
@@ -41,13 +47,12 @@ class FakeServer:
         if url == "https://s/st":
             return HttpResponse(200, content=json.dumps(
                 {"output": [
-                    {"type": "Patient", "url": "https://s/f/p"},
-                    {"type": "Condition", "url": "https://s/f/c"},
+                    {"type": t, "url": f"https://s/f/{i}"}
+                    for i, (t, _) in enumerate(self.files)
                 ]}).encode())
-        if url == "https://s/f/p":
-            return HttpResponse(200, content="\n".join(json.dumps(r) for r in PATIENTS).encode())
-        if url == "https://s/f/c":
-            return HttpResponse(200, content="\n".join(json.dumps(r) for r in CONDITIONS).encode())
+        if url.startswith("https://s/f/"):
+            _, recs = self.files[int(url.rsplit("/", 1)[1])]
+            return HttpResponse(200, content="\n".join(json.dumps(r) for r in recs).encode())
         if url.endswith("/$import"):
             self.import_bodies.append(json.loads(data))
             return HttpResponse(202, headers={"Content-Location": "https://cg/st"})
@@ -243,3 +248,144 @@ def test_eob_bench_landing_dir_matches_single_file(tmp_path):
     assert len(multi_lines) == n
     # spot-check the content is real EOB JSON
     assert json.loads(multi_lines[0])["resourceType"] == "ExplanationOfBenefit"
+
+
+# ------------------------------------------ one transform job per type
+
+BCDA = "https://bcda.example"
+
+
+def _eob(i: int, eob_id: str | None = None) -> dict:
+    from capgemini_himss24_fhirbulkdata_demo_spark.transforms.benchdata import make_eob
+
+    r = make_eob(i)
+    if eob_id is not None:
+        r["id"] = eob_id
+    return r
+
+
+def _run(spark, tmp_path, files, server_url=BCDA, client_id="client"):
+    from capgemini_himss24_fhirbulkdata_demo_spark.transforms.benchdata import RXNAV_BENCH
+
+    server = FakeServer(files)
+    conn = FhirBulkConnector(transport=server, sleep=lambda s: None)
+    rx = spark.createDataFrame(
+        [(k, v["name"], v["rxnorm"]) for k, v in sorted(RXNAV_BENCH.items())],
+        RXNAV_LOOKUP_SCHEMA,
+    )
+    res = run_bulk_import(
+        spark, conn, server_url, "g1", "tok", "https://cg", "itok",
+        str(tmp_path / "run"), rxnav=rx, client_id=client_id,
+    )
+    return res, server
+
+
+def _by_id(resources):
+    return {r["id"]: json.loads(json.dumps(r, sort_keys=True)) for r in resources}
+
+
+def _expected(server_url, rtype, records):
+    from capgemini_himss24_fhirbulkdata_demo_spark.transforms.benchdata import RXNAV_BENCH
+
+    return _by_id(fhir_oracle.process(server_url, rtype, records, RXNAV_BENCH))
+
+
+def _manifest_urls(server):
+    return [part["valueUri"]
+            for p in server.import_bodies[-1]["parameter"] if p["name"] == "input"
+            for part in p["part"] if part["name"] == "url"]
+
+
+def test_removed_ids_stay_scoped_to_their_landed_file(spark, tmp_path):
+    """The reference builds its removed-ids list per file: an id that
+    fails the gates in file A must not remove its passing twin in file
+    B, although both files now transform in one job."""
+    fails, passes = _eob(0, "dup"), _eob(5, "dup")  # 0: patient gate fails
+    assert _expected(BCDA, "ExplanationOfBenefit", [fails]) == {}
+    file_a = [fails, _eob(14)]
+    file_b = [passes, _eob(21)]
+    res, _ = _run(spark, tmp_path, [
+        ("ExplanationOfBenefit", file_a), ("ExplanationOfBenefit", file_b)])
+    a, b = res.landed
+    assert _by_id(_read_out(res.transformed[a])) == _expected(
+        BCDA, "ExplanationOfBenefit", file_a)
+    assert "dup" not in _by_id(_read_out(res.transformed[a]))
+    assert _by_id(_read_out(res.transformed[b])) == _expected(
+        BCDA, "ExplanationOfBenefit", file_b)
+    assert "dup" in _by_id(_read_out(res.transformed[b]))
+    assert res.counts == {a: (2, 1), b: (2, 2)}
+
+
+def test_file_with_no_survivors_still_imports_an_empty_blob(spark, tmp_path):
+    all_fail = [_eob(i) for i in (0, 1, 2, 8)]  # patient, claim, date, patient
+    keep = [_eob(i) for i in (5, 6)]
+    res, server = _run(spark, tmp_path, [
+        ("ExplanationOfBenefit", all_fail), ("ExplanationOfBenefit", keep)])
+    empty, full = res.landed
+    assert os.path.isfile(res.transformed[empty])
+    assert os.path.getsize(res.transformed[empty]) == 0
+    assert res.counts == {empty: (4, 0), full: (2, 2)}
+    assert sorted(_manifest_urls(server)) == sorted(
+        f"file://{res.transformed[p]}" for p in res.landed)
+
+
+def test_escaped_client_id_maps_each_file_to_its_own_output(spark, tmp_path):
+    """Landed names carry the client id; characters that Hive-style
+    partition directories escape must not break the file mapping."""
+    pats = [dict(PATIENTS[1], id=f"p{i}") for i in range(3)]
+    files = [("Patient", pats[:1]), ("Patient", pats[1:]), ("Condition", CONDITIONS)]
+    res, server = _run(spark, tmp_path, files, "https://fhir.epic.example", "a b%c=d+e")
+    assert all("a b%c=d+e" in os.path.basename(p) for p in res.landed)
+    outs = [res.transformed[p] for p in res.landed]
+    assert len(set(outs)) == 3
+    for (rtype, recs), out in zip(files, outs):
+        assert _by_id(_read_out(out)) == _expected(
+            "https://fhir.epic.example", rtype, recs)
+    assert res.counts == dict(zip(res.landed, [(1, 1), (2, 2), (1, 1)]))
+    assert sorted(_manifest_urls(server)) == sorted(f"file://{o}" for o in outs)
+
+
+def test_file_split_across_scan_tasks_lands_whole(spark, tmp_path):
+    from capgemini_himss24_fhirbulkdata_demo_spark.sources import read_ndjson
+
+    recs = [_eob(i) for i in range(400)]
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "16384")
+    try:
+        res, _ = _run(spark, tmp_path, [("ExplanationOfBenefit", recs)])
+        (landed,) = res.archived
+        assert read_ndjson(spark, landed).rdd.getNumPartitions() > 4
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    out = res.transformed[res.landed[0]]
+    assert os.path.isfile(out)
+    got = _read_out(out)
+    want = _expected(BCDA, "ExplanationOfBenefit", recs)
+    assert len(got) == len(want) and _by_id(got) == want
+    assert res.counts == {res.landed[0]: (400, len(want))}
+
+
+def test_landed_file_count_does_not_add_spark_jobs(spark, tmp_path):
+    """One transform job per resource type: six landed files of one
+    type submit no more Spark jobs than two do."""
+    sc = spark.sparkContext
+
+    def jobs(n_files):
+        group = f"jobs-{n_files}-files"
+        files = [("ExplanationOfBenefit", [_eob(5 + 8 * i), _eob(13 + 8 * i)])
+                 for i in range(n_files)]
+        sc.setJobGroup(group, group)
+        try:
+            _run(spark, tmp_path / group, files)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    two, six = jobs(2), jobs(6)
+    assert two > 0
+    assert six <= two, (two, six)

@@ -646,10 +646,14 @@ def test_runtime_bloom_filter_injects_on_selective_dim_join(spark):
 def test_x80_x81_narrow_no_shuffle(spark):
     import re
 
-    # x80: HOF segmentation is entirely narrow — the only exchange is
-    # the final ORDER BY range partition
+    # x80: HOF segmentation is entirely narrow — exactly two exchanges:
+    # one round-robin fanout that spreads the few scan partitions over
+    # the cores for the per-token fold, and the final ORDER BY range
+    # partition (plans/r12/x80_bpe_segment_after.txt); never a join
     p = explain_str(_plan(spark, "x80_bpe_segment"))
-    assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1, p
+    assert len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 2, p
+    assert len(re.findall(r"Arguments: RoundRobinPartitioning\(", p)) == 1, p
+    assert len(re.findall(r"Arguments: rangepartitioning\(", p)) == 1, p
     assert "Join" not in p, p
     # x81: slice-based chunking — no per-token explode-shuffle, no join;
     # one generate + the final sort exchange
