@@ -33,6 +33,7 @@ from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 
 from ..functions.encoding import b64url_encode_py
+from ..sources.ndjson import resource_type_from_name
 
 JWT_BEARER = "urn:ietf:params:oauth:client-assertion-type:jwt-bearer"
 NDJSON_CONTENT_TYPE = "application/fhir+ndjson"
@@ -96,17 +97,16 @@ def build_jwt_assertion(
 def build_import_manifest(blob_entries: list[tuple[str, str]]) -> dict:
     """FHIR ``Parameters`` import body (T20, ``__init__.py:205-242``).
 
-    ``blob_entries`` = [(blob_name, url)]; resource type = text before
-    the first '-' in the blob name (``:218``).
+    ``blob_entries`` = [(blob_name, url)]; the resource type comes
+    from the blob name (``resource_type_from_name``, ``:218``).
     """
     parameter = [{"name": "inputFormat", "valueString": NDJSON_CONTENT_TYPE}]
     for blob_name, url in blob_entries:
-        resource_name = os.path.basename(blob_name).split("-")[0]
         parameter.append(
             {
                 "name": "input",
                 "part": [
-                    {"name": "type", "valueString": resource_name},
+                    {"name": "type", "valueString": resource_type_from_name(blob_name)},
                     {"name": "url", "valueUri": url},
                 ],
             }
@@ -253,6 +253,8 @@ class FhirBulkConnector:
             data_url,
             headers={"Authorization": f"Bearer {token}", "Accept": NDJSON_CONTENT_TYPE},
         )
+        if not r.ok:  # an error body must not be landed and $imported as NDJSON
+            raise RuntimeError(f"export file download failed: {r.status_code} {r.content[:200]!r}")
         return r.content
 
     def _download_to(self, data_url: str, token: str, dest_path: str) -> None:

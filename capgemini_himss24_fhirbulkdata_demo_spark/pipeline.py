@@ -12,7 +12,7 @@ The reference's ``POST /himss24demo/bulkimport/latest`` flow
    reference loops over them sequentially, ``:644``): every
    file-scoped rule keys on the file tag, so batching changes the job
    count, not the per-file outputs. The type jobs run concurrently
-   (SURVEY §4.3.4);
+   (SURVEY §4.3.4). Streaming micro-batches land the same way;
 3. driver-side sink-commit: build the FHIR ``Parameters`` manifest →
    $import → poll → archive landed files → advance the cursor.
 
@@ -69,41 +69,34 @@ class LandedOutput(NamedTuple):
     rows_out: int
 
 
-def transform_landed_files(
-    spark: SparkSession,
-    paths: list[str],
+def land_tagged_files(
+    df: DataFrame,
+    names: list[str],
     server_url: str,
     out_dir: str,
     rxnav: DataFrame | None = None,
 ) -> dict[str, LandedOutput]:
-    """Step 2 for landed files of ONE resource type, as one Spark job:
-    read them as one multi-file scan tagged by source file → build the
-    transform once → write one NDJSON file per landed file.
-
-    Unknown (source, resource) pairs pass through untouched (the
-    reference ignores them too). File-scoped semantics survive the
-    batching: the EOB removed-ids exclusion keys on the file tag, and
-    each output holds exactly its own file's rows.
-
-    T16 count audit (``__init__.py:532`` "{kept}/{total} will be
-    loaded") rides the write as ``observe`` metrics, one ``count_if``
-    per file on each side of the transform — single pass, no extra
-    jobs, unlike the reference's len() bookkeeping.
+    """Transform a frame tagged by ``tag_input_file`` and land one
+    ``<out_dir>/<name stem>.ndjson`` blob per file in one Spark job;
+    ``names`` are the tag values, distinct file names of one resource
+    type. Batch and streaming import both land here. Unknown (source,
+    resource) pairs pass through untouched, as in the reference.
+    File-scoped rules (the EOB removed-ids exclusion) key on the tag.
+    The T16 count audit (``__init__.py:532``) rides the write as
+    ``observe`` metrics, one ``count_if`` per file on each side of the
+    transform: no extra jobs.
     """
-    names = [os.path.basename(p) for p in paths]
-    resources = {resource_type_from_name(p) for p in paths}
+    resources = {resource_type_from_name(n) for n in names}
     if len(resources) != 1 or len(set(names)) != len(names):
         raise ValueError(f"need distinct file names of one resource type: {names}")
-    resource = resources.pop()
 
     def per_file_counts():
         tag = F.col(INPUT_FILE_COL)
         return [F.count_if(tag == n).alias(str(i)) for i, n in enumerate(names)]
 
     obs_in, obs_out = Observation(), Observation()
-    df = read_ndjson(spark, paths, RESOURCE_SCHEMAS.get(resource), with_input_file=True)
     df = df.observe(obs_in, *per_file_counts())
-    fn = get_transform(server_url, resource)
+    fn = get_transform(server_url, resources.pop())
     if fn is not None:
         df = fn(df, rxnav)
     df = df.observe(obs_out, *per_file_counts())
@@ -112,11 +105,28 @@ def transform_landed_files(
     outs = [os.path.join(out_dir, os.path.splitext(n)[0] + ".ndjson") for n in names]
     write_ndjson_per_file(df, dict(zip(names, outs)))
     res = {}
-    for i, (path, name, out) in enumerate(zip(paths, names, outs)):
+    for i, (name, out) in enumerate(zip(names, outs)):
         n_in, n_out = obs_in.get[str(i)], obs_out.get[str(i)]
         logger.info("%s: %s/%s resources will be loaded", name, n_out, n_in)
-        res[path] = LandedOutput(out, n_in, n_out)
+        res[name] = LandedOutput(out, n_in, n_out)
     return res
+
+
+def transform_landed_files(
+    spark: SparkSession,
+    paths: list[str],
+    server_url: str,
+    out_dir: str,
+    rxnav: DataFrame | None = None,
+) -> dict[str, LandedOutput]:
+    """Step 2 for landed files of ONE resource type, as one Spark job:
+    read them as one multi-file scan tagged by source file, then
+    ``land_tagged_files``. Returns ``{path: LandedOutput}``."""
+    names = [os.path.basename(p) for p in paths]
+    schema = RESOURCE_SCHEMAS.get(resource_type_from_name(names[0]))
+    df = read_ndjson(spark, paths, schema, with_input_file=True)
+    landed = land_tagged_files(df, names, server_url, out_dir, rxnav)
+    return {p: landed[n] for p, n in zip(paths, names)}
 
 
 def transform_landed_file(
@@ -146,17 +156,12 @@ def run_bulk_import(
 ) -> PipelineResult:
     """The full export → transform → import → archive flow.
 
-    Landed files are grouped by resource type, and each group is ONE
-    Spark job (``transform_landed_files``) that still writes one
-    output file per landed file. The per-file fixed costs — building
-    the transform's expression tree, aggregating and broadcasting the
-    RxNav map, a write job — are paid once per type instead of once
-    per file, and a type's files share one scan whose tasks spread
-    over the cores. The type groups run as CONCURRENT jobs on a
-    driver-side thread pool, one thread per type, under the caller's
-    job group. The reference loops
-    over files sequentially (``__init__.py:644``); SURVEY §4.3.4 calls
-    for independent parallel loads.
+    Landed files are grouped by resource type; each group is ONE Spark
+    job (``transform_landed_files``), so per-file fixed costs (the
+    transform's expression tree, the RxNav broadcast, a write job) are
+    paid once per type. The type jobs run concurrently on a driver-side
+    thread pool under the caller's job group, where the reference loops
+    over files sequentially (``__init__.py:644``; SURVEY §4.3.4).
     """
     res = PipelineResult()
     since = state.get(server_url, group_id) if state else None

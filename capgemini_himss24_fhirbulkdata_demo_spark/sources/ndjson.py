@@ -6,15 +6,17 @@ decode/split/parse; ``:535`` re-join; ``:218`` type-from-filename).
 
 Spark mapping (SURVEY §1.2): ``spark.read.json`` *is* T1 (decode,
 line-split, per-line parse, null-on-missing) — distributed, spilling,
-vectorized. The sink is the native ``df.write.json`` (r7; previously
-``to_json(struct(*))`` + text write — byte-identical output, same
-Jackson generator, minus one projection), which reproduces
+vectorized. The sink is the native ``df.write.json``, which reproduces
 ``'\\n'.join(...)`` with absent-key semantics for nulls
 (``ignoreNullFields`` default true).
 
 Scale: a landing *directory* of NDJSON files is one distributed scan
 (each file ≥1 task, big files split on line boundaries); schema is
 curated (transforms/schemas.py) so reads never pay inference.
+
+Files stay the unit of import, as in the reference's manifest loop:
+``tag_input_file`` tags batch or streaming rows with their source
+file, and ``write_ndjson_per_file`` writes one blob per tagged file.
 """
 
 from __future__ import annotations
@@ -29,6 +31,17 @@ from pyspark.sql.types import StructType
 INPUT_FILE_COL = "_input_file"
 
 
+def tag_input_file(df: DataFrame) -> DataFrame:
+    """Tag each row of a file-source frame (batch or streaming) with
+    its source file's base name, as ``INPUT_FILE_COL``: the hidden
+    ``_metadata.file_name``, which the source URI-escapes (``a b`` as
+    ``a%20b``), decoded with a literal ``+`` protected from the form
+    decoder. Names are only unique within one directory.
+    """
+    escaped = F.replace(F.col("_metadata.file_name"), F.lit("+"), F.lit("%2B"))
+    return df.withColumn(INPUT_FILE_COL, F.url_decode(escaped))
+
+
 def read_ndjson(
     spark: SparkSession,
     path: str | list[str],
@@ -41,87 +54,46 @@ def read_ndjson(
     reference's tolerant ``try/except KeyError`` behavior); without,
     Spark infers by sampling (dev only — SURVEY §1.2).
 
-    ``with_input_file=True`` tags every row with the name of the file
-    it came from, as ``INPUT_FILE_COL``. The tag is the file source's
-    hidden ``_metadata.file_name`` column, decoded: the source reports
-    the URI-escaped name (``a b`` as ``a%20b``), and a literal ``+``
-    is protected first so the form decoder cannot read it as a space.
-    The decoded tag equals ``os.path.basename`` of the file path.
-    Names are only unique within one directory.
+    ``with_input_file=True`` tags every row with its source file name
+    (``tag_input_file``).
     """
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
     df = reader.json(path)
-    if with_input_file:
-        escaped = F.replace(F.col("_metadata.file_name"), F.lit("+"), F.lit("%2B"))
-        df = df.withColumn(INPUT_FILE_COL, F.url_decode(escaped))
-    return df
+    return tag_input_file(df) if with_input_file else df
 
 
-def write_ndjson(
-    df: DataFrame, path: str, mode: str = "overwrite", single_file: bool = False
-) -> str:
-    """Write a DataFrame as NDJSON (one JSON object per line).
+def write_ndjson(df: DataFrame, path: str, mode: str = "overwrite") -> str:
+    """Write a DataFrame as an NDJSON part-file directory (one JSON
+    object per line). Returns the written path.
 
     The JSON writer omits null fields (``ignoreNullFields`` default),
     matching the reference's output of plain ``json.dumps`` on dicts
-    that never contained those keys.
-
-    ``single_file=True`` produces exactly one NDJSON *file* at
-    ``path`` (coalesce(1) + part-file promotion) — the shape a FHIR
-    ``$import`` url must point at (one blob per manifest entry,
-    ``__init__.py:351-355``). The write is one task; to write many
-    such files in parallel, use ``write_ndjson_per_file``.
-    Returns the written path.
+    that never contained those keys. For the one-blob-per-file shape a
+    FHIR ``$import`` url must point at, use ``write_ndjson_per_file``.
     """
-    # Native JSON writer, not to_json(struct(*))+text: the rows hit the
-    # same Jackson generator (null fields omitted either way — measured
-    # byte-identical on the full EOB bench corpus) but skip the extra
-    # serialize-to-one-string-column projection; ~7% faster on the
-    # 100k-record write leg and one less node in the plan.
-    if not single_file:
-        df.write.mode(mode).json(path)
-        return path
-    import shutil
-
-    # honor mode semantics on the destination FILE (the temp dir write
-    # below is always overwrite — it's scratch space)
-    exists = os.path.exists(path)
-    if exists and mode in ("error", "errorifexists"):
-        raise FileExistsError(path)
-    if exists and mode == "ignore":
-        return path
-    tmp = path + ".__tmp__"
-    df.coalesce(1).write.mode("overwrite").json(tmp)
-    part = next(n for n in sorted(os.listdir(tmp)) if n.startswith("part-"))
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    if exists and mode == "append":
-        with open(path, "ab") as dst, open(os.path.join(tmp, part), "rb") as src:
-            dst.write(src.read())
-    else:
-        os.replace(os.path.join(tmp, part), path)
-    shutil.rmtree(tmp)
+    # Native JSON writer, not to_json(struct(*))+text: byte-identical
+    # output (same Jackson generator) minus one projection, ~7% faster
+    # on the 100k-record EOB write leg.
+    df.write.mode(mode).json(path)
     return path
 
 
 def write_ndjson_per_file(df: DataFrame, outputs: dict[str, str]) -> None:
-    """Write a frame tagged by ``read_ndjson(with_input_file=True)`` as
-    one NDJSON file per source file, in a single Spark job.
+    """Write a frame tagged by ``tag_input_file`` as one NDJSON file
+    per source file in a single Spark job: the one blob per manifest
+    entry a FHIR ``$import`` url must point at (``__init__.py:351-355``).
 
-    ``outputs`` maps each source file name (the tag value) to its
-    destination file. The frame is written once with ``partitionBy``
-    on the tag, which also drops the tag from the written rows. Then
-    each file's part files are promoted (one part) or concatenated in
-    task order (several) into its destination. A file with no rows has
-    no partition directory and gets an empty destination file, so
-    every source file still maps to one blob.
+    ``outputs`` maps each tag value to its destination file. The frame
+    is written once with ``partitionBy`` on the tag (which drops the
+    tag from the rows); each file's part files are then promoted (one)
+    or concatenated in task order (several) into its destination. A
+    file with no rows gets an empty destination file.
     """
     import shutil
     from urllib.parse import unquote
 
-    if not outputs:
-        return
     tmp = next(iter(outputs.values())) + ".__tmp__"
     df.write.mode("overwrite").partitionBy(INPUT_FILE_COL).json(tmp)
     prefix = INPUT_FILE_COL + "="

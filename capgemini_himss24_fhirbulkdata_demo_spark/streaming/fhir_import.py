@@ -2,12 +2,13 @@
 (SURVEY §3.1 step 4 + §4.3.5).
 
 The connector (or any export process) keeps landing NDJSON files into
-``landing_dir``; this stream picks each file up as a micro-batch,
-applies the (source, resource) transform, writes a single $import-ready
-NDJSON blob per batch, and hands (paths, batch_id) to a commit callback
-that POSTs the ``Parameters`` manifest. Exactly-once comes from the
-checkpoint: a replayed batch re-offers the same batch_id, so the commit
-callback dedupes on it (manifest id = batch id).
+``landing_dir``; this stream lands each micro-batch through the batch
+pipeline's core (``pipeline.land_tagged_files``) as one ``$import``-ready
+``<landed name>.ndjson`` blob per landed file, and hands (paths,
+batch_id) to a commit callback that POSTs the ``Parameters`` manifest.
+Exactly-once comes from the checkpoint: a replayed batch re-offers the
+same batch_id and rewrites the same blobs, so the commit callback
+dedupes on it (manifest id = batch id).
 
 One stream per resource type (schemas differ); the landing-file
 convention ``{Type}-*.json`` routes files to their stream via glob.
@@ -20,10 +21,10 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.ndjson import write_ndjson
-from ..transforms import get_transform
+from ..pipeline import land_tagged_files
+from ..sources.ndjson import INPUT_FILE_COL, tag_input_file
 from ..transforms.schemas import RESOURCE_SCHEMAS
-from .runner import DEFAULT_STATE_PARTITIONS, start_stateful_query
+from .runner import start_stateful_query
 from .sources import read_ndjson_stream
 
 
@@ -38,20 +39,15 @@ def start_streaming_import(
     rxnav: DataFrame | None = None,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
-    state_partitions: int | None = DEFAULT_STATE_PARTITIONS,
 ):
     """Start the incremental transform→land→commit stream for one
     resource type. Returns the StreamingQuery.
 
-    ``commit(ndjson_paths, batch_id)`` receives the written single-file
-    NDJSON blobs for the batch — the slot where the FHIR ``$import``
-    manifest POST goes (idempotent on batch_id).
-
-    ``state_partitions`` right-sizes the per-micro-batch shuffle (the
-    EOB transform's conflicted-ids groupBy) the same way the stateful
-    runner sizes state stores — a micro-batch is one landing file, so
-    the session's batch-scale shuffle default is far oversized here;
-    ``None`` inherits the session default.
+    ``commit(ndjson_paths, batch_id)`` receives the batch's blobs, one
+    per landed file — the slot where the FHIR ``$import`` manifest
+    POST goes (idempotent on batch_id). A landed file without rows
+    carries no tag, so it gets no blob; a batch without rows commits
+    nothing.
     """
     schema = RESOURCE_SCHEMAS.get(resource_type)
     if schema is None:
@@ -60,18 +56,17 @@ def start_streaming_import(
     stream = read_ndjson_stream(
         spark, pattern, schema, max_files_per_trigger=max_files_per_trigger
     )
-    fn = get_transform(server_url, resource_type)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df if fn is None else fn(batch_df, rxnav)
-        path = os.path.join(out_dir, f"{resource_type}-batch-{batch_id}.ndjson")
-        write_ndjson(out, path, single_file=True)
-        commit([path], batch_id)
+        names = sorted(r[0] for r in batch_df.select(INPUT_FILE_COL).distinct().collect())
+        if not names:
+            return
+        landed = land_tagged_files(batch_df, names, server_url, out_dir, rxnav)
+        commit([landed[n].out for n in names], batch_id)
 
     return start_stateful_query(
-        stream,
+        tag_input_file(stream),
         checkpoint_dir,
         foreach_batch=process_batch,
         trigger_available_now=available_now,
-        state_partitions=state_partitions,
     )

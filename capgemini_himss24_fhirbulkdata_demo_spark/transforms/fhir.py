@@ -246,10 +246,10 @@ def bcda_explanation_of_benefit(df: DataFrame, rxnav: DataFrame) -> DataFrame:
     # replaces two id-only shuffles plus a full extra source scan.
     #
     # The reference builds its removed-ids list per landed file
-    # (``__init__.py:459-533``), so a frame holding several files,
-    # tagged by ``read_ndjson(with_input_file=True)``, keys the
-    # exclusion on (id, file): an id failing in one file must not
-    # remove its passing twin from another.
+    # (``__init__.py:459-533``), so a frame tagged by ``tag_input_file``
+    # keys the exclusion on (id, file): an id failing in one file must
+    # not remove its passing twin from another. An untagged frame is
+    # one load (bench.py's directory read) and keys on id alone.
     key = ["id"] + ([INPUT_FILE_COL] if INPUT_FILE_COL in df.columns else [])
     flags = df.select(*key, keep.alias("_keep"))
     conflicted_ids = (

@@ -62,17 +62,9 @@ class FakeServer:
 
 
 def _read_out(out_path):
-    """Read pipeline NDJSON output: a single file (the $import-ready
-    shape) or a part-file directory."""
-    if os.path.isfile(out_path):
-        with open(out_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
-    rows = []
-    for name in sorted(os.listdir(out_path)):
-        if name.startswith("part-"):
-            with open(os.path.join(out_path, name)) as f:
-                rows.extend(json.loads(line) for line in f if line.strip())
-    return rows
+    """Read one $import-ready NDJSON blob."""
+    with open(out_path) as f:
+        return [json.loads(line) for line in f if line.strip()]
 
 
 def test_two_incremental_runs(spark, tmp_path):
@@ -111,6 +103,29 @@ def test_two_incremental_runs(spark, tmp_path):
         "https://cg", "itok", str(tmp_path / "run2"), rxnav=rx, state=state,
     )
     assert f"_since={res1.since_advanced_to}" in server.kickoff_urls[1]
+
+
+def test_failed_file_download_stops_the_run_before_import(spark, tmp_path):
+    """An export file answering 404 is not landed and $imported as
+    NDJSON: the run raises, archives nothing and keeps the cursor."""
+    import pytest
+
+    server = FakeServer()
+
+    def transport(method, url, **kw):
+        if url == "https://s/f/1":
+            return HttpResponse(404, content=b"not found")
+        return server(method, url, **kw)
+
+    conn = FhirBulkConnector(transport=transport, sleep=lambda s: None)
+    state = HighWaterMark(str(tmp_path / "state.json"))
+    state.advance("https://fhir.epic.example", "g1", "2024-01-01T00:00:00+00:00")
+    with pytest.raises(RuntimeError, match="404"):
+        run_bulk_import(spark, conn, "https://fhir.epic.example", "g1", "tok",
+                        "https://cg", "itok", str(tmp_path / "run"), state=state)
+    assert server.import_bodies == []
+    assert not (tmp_path / "run" / "archive").exists()
+    assert state.get("https://fhir.epic.example", "g1") == "2024-01-01T00:00:00+00:00"
 
 
 def test_high_water_mark_atomic(tmp_path):
@@ -264,18 +279,21 @@ def _eob(i: int, eob_id: str | None = None) -> dict:
     return r
 
 
-def _run(spark, tmp_path, files, server_url=BCDA, client_id="client"):
+def _bench_rxnav(spark):
     from capgemini_himss24_fhirbulkdata_demo_spark.transforms.benchdata import RXNAV_BENCH
 
-    server = FakeServer(files)
-    conn = FhirBulkConnector(transport=server, sleep=lambda s: None)
-    rx = spark.createDataFrame(
+    return spark.createDataFrame(
         [(k, v["name"], v["rxnorm"]) for k, v in sorted(RXNAV_BENCH.items())],
         RXNAV_LOOKUP_SCHEMA,
     )
+
+
+def _run(spark, tmp_path, files, server_url=BCDA, client_id="client"):
+    server = FakeServer(files)
+    conn = FhirBulkConnector(transport=server, sleep=lambda s: None)
     res = run_bulk_import(
         spark, conn, server_url, "g1", "tok", "https://cg", "itok",
-        str(tmp_path / "run"), rxnav=rx, client_id=client_id,
+        str(tmp_path / "run"), rxnav=_bench_rxnav(spark), client_id=client_id,
     )
     return res, server
 

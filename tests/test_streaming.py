@@ -379,6 +379,38 @@ def test_streaming_fhir_import(spark, tmp_path):
     assert len(commits) == 2
 
 
+def test_streaming_import_lands_each_file_like_the_reference(spark, tmp_path):
+    """Two EOB files in ONE micro-batch share an id that fails the
+    gates in file A and passes in file B. The reference removes ids per
+    file, so B keeps it: one committed blob per landed file, each equal
+    to the reference on its own file."""
+    from capgemini_himss24_fhirbulkdata_demo_spark.streaming.fhir_import import (
+        start_streaming_import,
+    )
+
+    from .test_pipeline import BCDA, _bench_rxnav, _by_id, _eob, _expected, _read_out
+
+    eob = "ExplanationOfBenefit"
+    files = {f"{eob}-a.json": [_eob(0, "dup"), _eob(14)],  # 0 fails the patient gate
+             f"{eob}-b.json": [_eob(5, "dup"), _eob(21)]}
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for name, recs in files.items():
+        (landing / name).write_text("\n".join(json.dumps(r) for r in recs))
+    commits = []
+    start_streaming_import(
+        spark, str(landing), eob, BCDA, str(tmp_path / "out"), str(tmp_path / "ck"),
+        lambda paths, batch_id: commits.append((batch_id, paths)),
+        rxnav=_bench_rxnav(spark),
+    ).awaitTermination(120)
+    [(batch_id, blobs)] = commits
+    assert batch_id == 0
+    assert [os.path.basename(p) for p in blobs] == [f"{eob}-a.ndjson", f"{eob}-b.ndjson"]
+    for recs, blob in zip(files.values(), blobs):
+        assert _by_id(_read_out(blob)) == _expected(BCDA, eob, recs)
+    assert "dup" in _by_id(_read_out(blobs[1]))
+
+
 def test_interval_join_stream_equals_batch(spark, landed_events, tmp_path):
     """Watermarked stream-stream interval join == x33 batch twin on a
     replayed complete source (modulo the unfinalizable watermark

@@ -113,33 +113,6 @@ def test_glob_scan_and_input_file_name(spark, tmp_path):
     assert by_id["p2"].endswith("Patient-b-2.json")
 
 
-def test_write_ndjson_single_file_modes(spark, tmp_path):
-    import json
-
-    import pytest as _pytest
-
-    from capgemini_himss24_fhirbulkdata_demo_spark.sources import write_ndjson
-
-    df1 = spark.createDataFrame([(1, "a")], "id INT, v STRING")
-    df2 = spark.createDataFrame([(2, "b")], "id INT, v STRING")
-    path = str(tmp_path / "out.ndjson")
-
-    def read_ids():
-        with open(path) as f:
-            return sorted(json.loads(l)["id"] for l in f if l.strip())
-
-    assert write_ndjson(df1, path, single_file=True) == path
-    assert read_ids() == [1]
-    with _pytest.raises(FileExistsError):
-        write_ndjson(df2, path, mode="error", single_file=True)
-    write_ndjson(df2, path, mode="ignore", single_file=True)
-    assert read_ids() == [1]  # untouched
-    write_ndjson(df2, path, mode="append", single_file=True)
-    assert read_ids() == [1, 2]
-    write_ndjson(df2, path, mode="overwrite", single_file=True)
-    assert read_ids() == [2]
-
-
 def test_delta_roundtrip_when_available(spark, tmp_path):
     """Delta read/write through the tabular paths. Skipped when
     delta-spark is absent (this container); the gate itself — a clear

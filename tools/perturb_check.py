@@ -117,34 +117,32 @@ def fhir_perturb() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     rx = _rxnav_df(spark)
     tmp = tempfile.mkdtemp(prefix="fhirperturb_")
+
+    def canon_docs(docs):
+        # multiset of key-sorted JSON (duplicate ids make a dict keyed
+        # by id lossy); ints normalize to floats so the JSON integer 10
+        # equals the struct-schema double 10.0, the same equivalence
+        # the golden test gets from Python dict equality
+        def norm(v):
+            if isinstance(v, bool):
+                return v
+            if isinstance(v, int):
+                return float(v)
+            if isinstance(v, list):
+                return [norm(x) for x in v]
+            if isinstance(v, dict):
+                return {k: norm(x) for k, x in v.items()}
+            return v
+
+        return sorted(_json.dumps(norm(d), sort_keys=True) for d in docs)
+
     flagged: list[str] = []
     for case, (server_url, resource, resources) in sorted(cases.items()):
         in_path = os.path.join(tmp, f"{resource}-{case}.json")
         with open(in_path, "w") as f:
             f.write("\n".join(_json.dumps(r) for r in resources))
         fn = get_transform(server_url, resource)
-        expected = fhir_oracle.process(server_url, resource, resources, RXNAV)
-
-        def canon_docs(docs):
-            # multiset of key-sorted JSON (duplicate ids make a dict
-            # keyed by id lossy); ints normalize to floats so the JSON
-            # integer 10 equals the struct-schema double 10.0, the
-            # same equivalence the golden test gets from Python dict
-            # equality
-            def norm(v):
-                if isinstance(v, bool):
-                    return v
-                if isinstance(v, int):
-                    return float(v)
-                if isinstance(v, list):
-                    return [norm(x) for x in v]
-                if isinstance(v, dict):
-                    return {k: norm(x) for k, x in v.items()}
-                return v
-
-            return sorted(_json.dumps(norm(d), sort_keys=True) for d in docs)
-
-        exp_c = canon_docs(expected)
+        exp_c = canon_docs(fhir_oracle.process(server_url, resource, resources, RXNAV))
         results = {}
         for parts in (32, 5):
             for in_parts in (1, 7):
@@ -166,16 +164,11 @@ def fhir_perturb() -> None:
     # ---- streaming-import leg (O6 incremental form, r7 verdict #7) ----
     # Replay each golden corpus through start_streaming_import at two
     # micro-batch sizes (1 landing file per batch vs all files in one
-    # batch) and assert the union of per-batch outputs equals the
-    # batch pipeline's oracle output. The corpus is landed as TWO
-    # id-coherent files (all rows of a resource id stay in one file):
-    # the conflicted-ids removal is per-batch state, so its unit of
-    # correctness is the batch — exactly the reference's own
-    # incremental contract, whose processing unit is the export FILE
-    # from the manifest loop (__init__.py:643-665), trivially
-    # id-coherent. With id-coherent files, per-file == global
-    # semantics, so both micro-batch sizes must reproduce the batch
-    # oracle bit-for-bit.
+    # batch). The corpus lands as TWO files, rows alternating between
+    # them, so a duplicate id spans both files. The reference's unit is
+    # the export FILE (manifest loop, __init__.py:643-665; removed ids
+    # per file, :459-533), so both micro-batch sizes must reproduce the
+    # union of the per-file oracle outputs bit-for-bit.
     import shutil
 
     from capgemini_himss24_fhirbulkdata_demo_spark.streaming.fhir_import import (
@@ -184,35 +177,12 @@ def fhir_perturb() -> None:
 
     stream_flagged: list[str] = []
     for case, (server_url, resource, resources) in sorted(cases.items()):
-        expected = fhir_oracle.process(server_url, resource, resources, RXNAV)
-
-        def canon_docs(docs):
-            def norm(v):
-                if isinstance(v, bool):
-                    return v
-                if isinstance(v, int):
-                    return float(v)
-                if isinstance(v, list):
-                    return [norm(x) for x in v]
-                if isinstance(v, dict):
-                    return {k: norm(x) for k, x in v.items()}
-                return v
-
-            return sorted(_json.dumps(norm(d), sort_keys=True) for d in docs)
-
-        exp_c = canon_docs(expected)
-        # id-coherent split: ids in first-appearance order, first half
-        # of ids -> file 0, rest -> file 1 (row order preserved)
-        id_order: list[str] = []
-        for r in resources:
-            rid = r.get("id")
-            if rid not in id_order:
-                id_order.append(rid)
-        first_ids = set(id_order[: max(1, len(id_order) // 2)])
-        split = ([], [])
-        for r in resources:
-            split[0 if r.get("id") in first_ids else 1].append(r)
-
+        split = [p for p in (resources[0::2], resources[1::2]) if p]
+        exp_c = canon_docs(
+            doc
+            for part in split
+            for doc in fhir_oracle.process(server_url, resource, part, RXNAV)
+        )
         results = {}
         for mb_label, max_files in (("file_per_batch", 1), ("one_batch", None)):
             run_dir = os.path.join(tmp, f"stream-{case}-{mb_label}")
@@ -220,7 +190,7 @@ def fhir_perturb() -> None:
             out_dir = os.path.join(run_dir, "out")
             os.makedirs(landing)
             os.makedirs(out_dir)
-            for i, part in enumerate(p for p in split if p):
+            for i, part in enumerate(split):
                 with open(
                     os.path.join(landing, f"{resource}-{i:03d}.json"), "w"
                 ) as f:
@@ -263,7 +233,8 @@ def fhir_perturb() -> None:
                 "unstable": flagged,
                 "streaming_perturbations": "micro-batch size "
                 "{1 file/batch, all-in-one} via start_streaming_import "
-                "over a 2-file id-coherent landing split",
+                "over a 2-file alternating-row landing split, "
+                "against the union of per-file oracle outputs",
                 "streaming_unstable": stream_flagged,
             }
         )
