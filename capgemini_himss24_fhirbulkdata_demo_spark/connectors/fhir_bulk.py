@@ -263,8 +263,9 @@ class FhirBulkConnector:
         driver memory); injected transports fall back to the in-memory
         interface (tests, small fixtures)."""
         if self.transport is not _requests_transport:
+            content = self.fetch_export_file(data_url, token)  # raises before landing
             with open(dest_path, "wb") as f:
-                f.write(self.fetch_export_file(data_url, token))
+                f.write(content)
             return
         import requests
 

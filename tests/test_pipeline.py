@@ -124,6 +124,7 @@ def test_failed_file_download_stops_the_run_before_import(spark, tmp_path):
         run_bulk_import(spark, conn, "https://fhir.epic.example", "g1", "tok",
                         "https://cg", "itok", str(tmp_path / "run"), state=state)
     assert server.import_bodies == []
+    assert [p.name.split("-")[0] for p in (tmp_path / "run" / "landing").iterdir()] == ["Patient"]
     assert not (tmp_path / "run" / "archive").exists()
     assert state.get("https://fhir.epic.example", "g1") == "2024-01-01T00:00:00+00:00"
 
